@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the vector hot path (SURVEY §7.3:
@@ -581,6 +581,7 @@ object GraftFunctions {
       reg.createOrReplaceTempFunction("graft_ngram8", GraftExtensions.ngram8Builder, "scala_udf")
       reg.createOrReplaceTempFunction("graft_cdc_ids", GraftExtensions.cdcIdsBuilder, "scala_udf")
       reg.createOrReplaceTempFunction("graft_zorder", GraftExtensions.zorderBuilder, "scala_udf")
+      reg.createOrReplaceTempFunction("graft_region", GraftExtensions.regionBuilder, "scala_udf")
     }
   }
 }
@@ -624,6 +625,18 @@ object GraftExtensions {
       }
       ZOrderCode(widened(0), widened(1))
     }
+
+  private[expressions] val regionBuilder: Seq[Expression] => Expression = {
+    case Seq(catalog, lon, lat) =>
+      // any numeric coordinate widens to the double the index compares
+      def widen(c: Expression) = c.dataType match {
+        case _: NumericType if c.dataType != DoubleType => Cast(c, DoubleType)
+        case _ => c
+      }
+      RegionLookup(catalog, widen(lon), widen(lat))
+    case children => throw new IllegalArgumentException(
+      s"graft_region expects (catalog, lon, lat), got ${children.size} arguments")
+  }
 
   private[expressions] val cdcIdsBuilder: Seq[Expression] => Expression =
     children => {
@@ -677,6 +690,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_zorder"),
       new ExpressionInfo(classOf[ZOrderCode].getName, "graft_zorder"),
       GraftExtensions.zorderBuilder))
+    ext.injectFunction((
+      FunctionIdentifier("graft_region"),
+      new ExpressionInfo(classOf[RegionLookup].getName, "graft_region"),
+      GraftExtensions.regionBuilder))
     // manifest-stats file pruning folded into logical statistics, so a
     // WHERE-pruned snap relation can broadcast (see SnapStatsPrune)
     ext.injectOptimizerRule(_ => graft.sources.SnapStatsPrune)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.expressions.RegionIndex
 import graft.sources.Tables
 
 /** Geo-partitioned ingest semantics from the reference
@@ -10,12 +11,15 @@ import graft.sources.Tables
   * rawTweet-style envelope projection + per-region topic routing (O6/O7).
   *
   * The reference pushes the geo predicate to Twitter's server
-  * (`regionSpout.go:133-139`); here it is an engine-side broadcast range
-  * join — the catalog is tiny (≤25 regions, `regionSpout.go:77`), so the
-  * fact stream never shuffles for region assignment. At 100 TB the
-  * assignment stays a map-side broadcast join; only the per-region count
-  * aggregate exchanges (partial agg first), and the output is partitioned
-  * by region exactly like the reference's per-region Kafka topics.
+  * (`regionSpout.go:133-139`); here it is one native map-side expression,
+  * `graft_region` ([[graft.expressions.RegionLookup]]), that looks each
+  * point up in a uniform grid index built once from the catalog (Raptor's
+  * raster/vector lookup, VLDB 2019). The fact stream never shuffles for
+  * region assignment, the per-row work follows the catalog's local
+  * density rather than its size, and the plan is the same few codegen'd
+  * lines at 2 or 10,000 regions. Only the per-region count aggregate
+  * exchanges (partial agg first), and the output is partitioned by region
+  * exactly like the reference's per-region Kafka topics.
   *
   * The `events` testdata has no coordinates, so queries derive a
   * deterministic synthetic point per event with pure integer arithmetic —
@@ -56,12 +60,19 @@ object Geo {
         col("centerLat"), col("centerLon"),
         col("north"), col("east"), col("south"), col("west"))
 
-  /** Point-in-box containment (O4). least/greatest absorbs the reference's
-    * inverted east/west naming; bounds inclusive like Twitter's filter. */
-  def containsPoint(lon: Column, lat: Column): Column =
-    lon >= least(col("east"), col("west")) &&
-    lon <= greatest(col("east"), col("west")) &&
-    lat >= col("south") && lat <= col("north")
+  /** [[loadCatalog]] as [[Region]]s. Bounds may be inferred as integers
+    * or missing; a missing bound reads as NaN, which [[regionIdFor]]
+    * rejects along with a missing id. */
+  def loadRegions(spark: SparkSession, path: String): Seq[Region] =
+    loadCatalog(spark, path).collect().toSeq.map { r =>
+      def bound(f: String) = Option(r.getAs[Any](f)).fold(Double.NaN) {
+        case v: Number => v.doubleValue
+        case v => throw new IllegalArgumentException(s"region catalog: $f bound $v is not a number")
+      }
+      Region(r.getAs[String]("name"), r.getAs[String]("id"),
+        bound("centerLat"), bound("centerLon"),
+        bound("north"), bound("east"), bound("south"), bound("west"))
+    }
 
   /** The deterministic synthetic point columns (see object doc). Integer
     * ops first, one final division — bit-identical across engines. */
@@ -86,38 +97,32 @@ object Geo {
        |  ('United States','USA1',49.31884057971014,-96.5795,24.681159420289855,-67.59279753931825))
        |  $alias(name, id, north, east, south, west)""".stripMargin
 
-  /** Region-assignment column: an ordered when-chain over the (tiny, ≤25
-    * per regionSpout.go:77) catalog. Purely map-side — no join, no shuffle,
-    * whole-stage-codegen'd — which is the right shape at 100 TB: the fact
-    * stream is never exchanged just to learn its region. Chain order is
-    * ascending region ID, so ties on the shared USA0/USA1 boundary resolve
-    * to the lowest ID (FIXTURES.md C); no match → 'NONE'. */
-  def regionIdFor(catalog: Seq[Region], lon: Column, lat: Column): Column =
-    catalog.sortBy(_.id).foldRight(lit("NONE")) { (r, rest) =>
-      when(
-        lon >= math.min(r.east, r.west) && lon <= math.max(r.east, r.west) &&
-        lat >= r.south && lat <= r.north, lit(r.id)).otherwise(rest)
-    }
+  /** The catalog literal `graft_region` takes, one struct per box. */
+  private case class Box(id: String, lo: Double, hi: Double, south: Double, north: Double)
+
+  /** Region-assignment column (O4): the id of the lowest-id box
+    * containing (lon, lat), inclusive bounds, east/west read through
+    * least/greatest; no match, or a null or NaN coordinate → 'NONE'. So the
+    * shared USA0/USA1 boundary resolves to USA0 (FIXTURES.md C). One native
+    * expression over a grid index of the catalog (see the object doc): no
+    * join, no shuffle, whole-stage-codegen'd, and no cap on the catalog
+    * size. A null id or a non-finite bound fails here, before any query
+    * runs. */
+  def regionIdFor(catalog: Seq[Region], lon: Column, lat: Column): Column = {
+    val boxes = catalog.map(r =>
+      Box(r.id, math.min(r.east, r.west), math.max(r.east, r.west), r.south, r.north))
+    boxes.zipWithIndex.foreach { case (b, k) =>
+      RegionIndex.check(k, b.id, b.lo, b.hi, b.south, b.north) }
+    call_function("graft_region", typedLit(boxes), lon, lat)
+  }
 
   /** Events with their assigned region ID (map-side, see regionIdFor). */
   def assignRegion(spark: SparkSession, events: DataFrame): DataFrame = {
+    // streams reach here without Tables.load, whose call registers
+    // graft_region in a session built outside graft.Session
+    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val pts = withPoint(events)
     pts.withColumn("region", regionIdFor(usaCatalog, col("lon"), col("lat")))
-  }
-
-  /** General form of region assignment for catalogs too large to inline
-    * as a when-chain (the reference caps at 25 regions so regionIdFor is
-    * the default, but a 10k-region catalog needs this): broadcast range
-    * join on containment, lowest-ID tie-break via min, NONE for misses.
-    * Still no shuffle of the fact side — the catalog broadcasts and the
-    * per-event aggregate keys on the event's unique id. Equality with the
-    * when-chain is spec-asserted. */
-  def assignRegionViaJoin(spark: SparkSession, events: DataFrame,
-                          catalog: DataFrame): DataFrame = {
-    val pts = withPoint(events)
-    pts.join(broadcast(catalog), containsPoint(col("lon"), col("lat")), "left")
-      .groupBy(pts.columns.map(col): _*)
-      .agg(coalesce(min(col("id")), lit("NONE")).as("region"))
   }
 
   /** q19: per-region event counts — the reference's core routing semantic

@@ -40,9 +40,9 @@ object Ingest {
     else raw
   }
 
-  /** O4→O5→O6: region assignment (map-side when-chain — legal on streams
-    * because it shuffles nothing), drop out-of-region traffic like the
-    * server-side filter did, then project the rawTweet envelope
+  /** O4→O5→O6: region assignment (the map-side grid lookup of
+    * `Geo.regionIdFor` — legal on streams because it shuffles nothing),
+    * drop out-of-region traffic like the server-side filter did, then project the rawTweet envelope
     * (`regionSpout.go:46-51`) with its per-region topic
     * (`regionSpout.go:156`). Works identically on batch and streaming
     * frames. */

@@ -15,7 +15,9 @@ import graft.operators.Geo
   *     <locations.json> <eventsDir> <outDir> <checkpointRoot>
   *
   * Differences from the reference, all strictly stronger (SURVEY §7.4):
-  * exactly-once file sink vs at-most-once fire-and-forget; no 30 s
+  * any catalog size (`Geo.regionIdFor`'s grid index) vs a hard cap of 25
+  * regions (`regionSpout.go:77`); exactly-once file sink vs at-most-once
+  * fire-and-forget; no 30 s
   * per-region connection stagger (source partitions fan out instead,
   * `regionSpout.go:98`); stall handling is checkpoint recovery + flags
   * rather than an empty `if` (`regionSpout.go:113-115`); shutdown hook
@@ -27,16 +29,11 @@ object RegionSpoutApp {
     val spark = Session.get()
 
     // O1: catalog from locations.json — same file format the reference
-    // parses (regionSpout.go:169-184), quirks preserved
-    val catalog = Geo.loadCatalog(spark, locationsPath).collect().map { r =>
-      Geo.Region(r.getAs[String]("name"), r.getAs[String]("id"),
-        r.getAs[Double]("centerLat"), r.getAs[Double]("centerLon"),
-        r.getAs[Double]("north"), r.getAs[Double]("east"),
-        r.getAs[Double]("south"), r.getAs[Double]("west"))
-    }.toSeq
-    require(catalog.size <= 25, // regionSpout.go:77's cap, kept as a sanity bound
-      s"catalog has ${catalog.size} regions; the reference caps at 25 — " +
-        "use Geo.assignRegionViaJoin for larger catalogs")
+    // parses (regionSpout.go:169-184), quirks preserved. The reference's
+    // fixed [25]uint64 counter array (regionSpout.go:77) capped it at 25
+    // regions; the grid-indexed assignment takes any size, and a null id
+    // or non-finite bound is rejected before the streams start.
+    val catalog = Geo.loadRegions(spark, locationsPath)
 
     // O2→O7: ingest → envelope → per-region partitioned sink, run under
     // the stall supervisor (O9's restart action): a crashed sink restarts

@@ -9,9 +9,22 @@ class GeoSpec extends SparkSpec {
 
   /** Pure-Scala containment mirror (lowest-id tie-break), the spec oracle. */
   private def expectedRegion(lon: Double, lat: Double): String =
-    Geo.usaCatalog.sortBy(_.id).find(r =>
-      lon >= math.min(r.east, r.west) && lon <= math.max(r.east, r.west) &&
-        lat >= r.south && lat <= r.north).map(_.id).getOrElse("NONE")
+    GeoFixtures.bruteForce(Geo.usaCatalog, lon, lat)
+
+  /** The synthetic point of an event id (Geo's object doc). */
+  private def pointOf(id: Long): (Double, Double) =
+    ((-1300 + id % 660) / 10.0, (240 + (id * 7919) % 260) / 10.0)
+
+  /** Runs `body` on a fresh thread with the JVM's default stack size, so a
+    * deep driver-side recursion fails here as it would in an app. */
+  private def onDefaultStack[T](body: => T): T = {
+    @volatile var out: Either[Throwable, T] = Left(new IllegalStateException("not run"))
+    val t = new Thread(null, () => out = try Right(body) catch { case e: Throwable => Left(e) },
+      "geo-default-stack", 0L)
+    t.start()
+    t.join()
+    out.fold(e => throw e, identity)
+  }
 
   test("shared USA0/USA1 boundary resolves to lowest region id") {
     val df = Seq((-96.5795, 30.0)).toDF("lon", "lat")
@@ -55,13 +68,80 @@ class GeoSpec extends SparkSpec {
     }
   }
 
-  test("join-based assignment (large-catalog form) equals the when-chain") {
-    val events = Tables.events(spark, sf)
-    val viaChain = Geo.assignRegion(spark, events)
-      .select(col("event_id"), col("region"))
-    val viaJoin = Geo.assignRegionViaJoin(spark, events, Geo.regions(spark))
-      .select(col("event_id"), col("region"))
-    assert(viaChain.exceptAll(viaJoin).isEmpty && viaJoin.exceptAll(viaChain).isEmpty)
+  test("grid assignment equals brute force; a duplicated input keeps its duplicates") {
+    val events = Tables.events(spark, sf).limit(1000).cache()
+    try {
+      val doubled = events.union(events)
+      val usa = Geo.assignRegion(spark, doubled).select(col("event_id"), col("region")).collect()
+      assert(usa.length == 2 * events.count())
+      usa.foreach { r =>
+        val (lon, lat) = pointOf(r.getLong(0))
+        assert(r.getString(1) == expectedRegion(lon, lat), s"event ${r.getLong(0)}")
+      }
+      val cat = GeoFixtures.seededBoxes(400, seed = 7)
+      val seeded = Geo.withPoint(doubled)
+        .select(col("event_id"), Geo.regionIdFor(cat, col("lon"), col("lat")).as("r"))
+        .collect()
+      assert(seeded.length == usa.length)
+      assert(seeded.map(_.getString(1)).distinct.length > 50, "catalog must spread the points")
+      seeded.foreach { r =>
+        val (lon, lat) = pointOf(r.getLong(0))
+        assert(r.getString(1) == GeoFixtures.bruteForce(cat, lon, lat), s"event ${r.getLong(0)}")
+      }
+    } finally events.unpersist()
+  }
+
+  test("400 and 10,000 seeded boxes over 100k points: default stack, no codegen fallback") {
+    for (n <- Seq(400, 10000)) {
+      val cat = GeoFixtures.seededBoxes(n, seed = n.toLong)
+      val assigned = Geo.withPoint(spark.range(100000L).toDF("event_id"))
+        .withColumn("region", Geo.regionIdFor(cat, col("lon"), col("lat")))
+      val prev = spark.conf.getOption("spark.sql.codegen.fallback")
+      // a generated class that fails to compile now fails the query
+      // instead of silently running interpreted
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try onDefaultStack {
+        assigned.write.format("noop").mode("overwrite").save()
+        val plan = assigned.queryExecution.executedPlan
+        assert(plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]),
+          s"$n boxes: assignment must run whole-stage codegen'd")
+        // exact on a 2,000-point sample against the ordered scan
+        val sample = assigned.filter(col("event_id") % 50 === 0)
+          .select(col("event_id"), col("region")).collect()
+        assert(sample.length == 2000)
+        sample.foreach { r =>
+          val (lon, lat) = pointOf(r.getLong(0))
+          assert(r.getString(1) == GeoFixtures.bruteForce(cat, lon, lat), s"$n boxes, event ${r.getLong(0)}")
+        }
+      } finally prev.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
+        spark.conf.set("spark.sql.codegen.fallback", _))
+    }
+  }
+
+  test("a catalog with a null id or a non-finite bound is rejected up front") {
+    val ok = Geo.usaCatalog.head
+    val bad = Seq(ok.copy(id = null), ok.copy(north = Double.NaN),
+      ok.copy(east = Double.PositiveInfinity), ok.copy(south = Double.NegativeInfinity))
+    bad.foreach { r =>
+      val e = intercept[IllegalArgumentException](Geo.regionIdFor(Seq(r), col("lon"), col("lat")))
+      assert(e.getMessage.contains("region catalog"), e.getMessage)
+    }
+    // the same check guards a catalog handed to graft_region directly
+    val e = intercept[Exception](spark.sql(
+      "SELECT graft_region(array(named_struct('id', 'A', 'lo', 0d, 'hi', double('NaN'), " +
+        "'south', 0d, 'north', 1d)), id, id) FROM range(3)").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("non-finite hi bound")), e.toString)
+  }
+
+  test("graft_region from SQL: lowest id wins, NONE on a miss or a null or NaN coordinate") {
+    val got = spark.sql(
+      """SELECT graft_region(array(
+        |    named_struct('id', 'b', 'lo', 0d, 'hi', 10d, 'south', 0d, 'north', 10d),
+        |    named_struct('id', 'a', 'lo', 5d, 'hi', 5d, 'south', 0d, 'north', 10d)), x, y) AS r
+        |FROM VALUES (5, 5), (4, 5), (11, 5), (NULL, 5), (double('NaN'), 5) AS t(x, y)""".stripMargin)
+      .collect().map(_.getString(0)).toSeq
+    assert(got == Seq("a", "b", "NONE", "NONE", "NONE"))
   }
 
   test("locations.json-format catalog loads with the east/west quirk intact") {
@@ -76,5 +156,20 @@ class GeoSpec extends SparkSpec {
     assert(r.getAs[String]("id") == "USA0")
     // east holds the SMALLER longitude — preserved, not "fixed"
     assert(r.getAs[Double]("east") < r.getAs[Double]("west"))
+  }
+
+  test("loadRegions reads integer bounds; a missing bound fails before any query") {
+    val tmp = java.nio.file.Files.createTempFile("locations", ".json")
+    java.nio.file.Files.writeString(tmp,
+      """[{"name":"a","ID":"A","centerLat":1,"centerLon":1,"north":2,"east":0,"south":0,"west":2}]""")
+    val regions = Geo.loadRegions(spark, tmp.toString)
+    assert(regions.map(r => (r.id, r.north, r.east)) == Seq(("A", 2.0, 0.0)))
+    java.nio.file.Files.writeString(tmp,
+      """[{"name":"a","ID":"A","centerLat":1,"centerLon":1,"north":2,"east":0,"south":0,"west":2},
+        |{"name":"b","ID":"B","centerLat":1,"centerLon":1,"north":null,"east":0,"south":0,"west":2}]"""
+        .stripMargin)
+    val e = intercept[IllegalArgumentException](
+      Geo.regionIdFor(Geo.loadRegions(spark, tmp.toString), col("lon"), col("lat")))
+    assert(e.getMessage.contains("'B' has a non-finite north bound"), e.getMessage)
   }
 }

@@ -20,6 +20,31 @@ class PlanShapeSpec extends SparkSpec {
   private def allNodes(p: SparkPlan): Seq[SparkPlan] = PlanWalk.allNodes(p)
   private def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] = PlanWalk.shuffles(p)
 
+  test("RegionSpoutApp envelope: one codegen stage, no exchange, nested loop or CaseWhen") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.operators.Geo
+    val catalog = GeoFixtures.seededBoxes(25, seed = 1)
+    val envelope = Geo.withPoint(graft.sources.Tables.events(spark, sf))
+      .withColumn("region", Geo.regionIdFor(catalog, col("lon"), col("lat")))
+      .filter(col("region") =!= "NONE")
+      .select(col("event_id").cast("string").as("id"), col("props").as("text"),
+        col("region"), concat(lit("raw-tweets-"), col("region")).as("topic"))
+    val nodes = allNodes(executed(envelope))
+    val stages = nodes.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+    assert(stages.size == 1, s"expected one codegen stage, got ${stages.size}")
+    val exchanges = nodes.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+    assert(exchanges.isEmpty, s"assignment must not exchange: ${exchanges.map(_.nodeName)}")
+    val nlj = nodes.collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j }
+    assert(nlj.isEmpty, "assignment must not join the catalog")
+    def exprs[T](pf: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, T]) =
+      nodes.flatMap(_.expressions.flatMap(_.collect(pf)))
+    assert(exprs { case c: org.apache.spark.sql.catalyst.expressions.CaseWhen => c }.isEmpty,
+      "no when-chain may survive in the plan")
+    assert(exprs { case r: graft.expressions.RegionLookup => r }.nonEmpty,
+      "the native lookup must be in the plan")
+  }
+
   test("q61 quantization is map-side: only the output sort exchanges") {
     val p = executed(graft.operators.Similarity.queries("q61_quantize_embeddings")(spark, sf))
     assert(shuffles(p).size <= 1,
