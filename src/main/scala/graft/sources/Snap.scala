@@ -1,9 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType, DataType,
+  DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType,
+  ShortType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Snapshot-committed table format — the mutation story the engine was
   * missing: UPSERT and DELETE against an existing table without
@@ -58,8 +64,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * ([[Published.moveResumable]]).
   *
   * Scale ledger: driver state is O(buckets + versions·files) manifest
-  * METADATA — never row data. The only collects are per-bucket stat
-  * rows (≤ buckets) and manifest listings (≤ versions, vacuum-bounded).
+  * METADATA plus, per write, at most a broadcast threshold's worth of
+  * delta KEYS ([[contractPass]]'s driver path, bounded and skipped for
+  * larger deltas). The other collects are per-bucket stat rows
+  * (≤ buckets) and manifest listings (≤ versions, vacuum-bounded).
   */
 object Snap {
 
@@ -1226,18 +1234,11 @@ object Snap {
           else sys.error(s"snap $loc exists with tag '${h.tag}' != '$tag' — " +
             "drop it explicitly before re-creating with new lineage")
         case None =>
-          // one materialization of the caller's data lineage (merge's
-          // r17 lesson applied to create, r20): the bounds collect and
-          // the staging write would otherwise each re-run it. Persist
-          // only when the CALLER has not already cached the plan (r20
-          // advice): the finally-unpersist must never evict a cache
-          // entry the caller still owns.
-          val callerCached =
-            data.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-          val dataP =
-            if (callerCached) data
-            else data.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // one materialization of the caller's data lineage: the
+          // bounds collect and the staging write would otherwise each
+          // re-run it
+          val held = new Held(data)
+          val dataP = held.frame
           try {
             // every needed dimension bound in ONE job (a zorder create
             // used to pay two)
@@ -1268,9 +1269,23 @@ object Snap {
             graft.RestartKit.crashWindow("snapstage", SnapHaltEnv)
             commitManifest(Published.fsOf(loc), loc, m0.copy(files = files),
               gate)
-          } finally { if (!callerCached) { dataP.unpersist(); () } }
+          } finally held.release()
       }
     }
+  }
+
+  /** One materialization of a caller's frame for the span of a write —
+    * the contract pass, the range collects and the staging write would
+    * otherwise each re-run an arbitrarily expensive lineage. Persisted
+    * (MEMORY_AND_DISK: spills rather than OOMs) only when the caller has
+    * not already cached the plan, so [[release]] — in every writer's
+    * `finally`, and before an auto-optimize that wants the executor
+    * memory back — never evicts a cache entry the caller still owns. */
+  private[sources] final class Held(df: DataFrame) {
+    private val owned = df.storageLevel == StorageLevel.NONE
+    val frame: DataFrame =
+      if (owned) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    def release(): Unit = if (owned) { frame.unpersist(); () }
   }
 
   /** Copy-on-write MERGE: `delta` holds one row per key — full table
@@ -1301,13 +1316,7 @@ object Snap {
       "autoOptimize must be 0 (off) or >= 2 (folding below 2 files/bucket " +
         "is a no-op)")
     require(autoVacuum >= 0, "autoVacuum must be 0 (off) or >= 1 (versions kept)")
-    // one materialization of the caller's delta lineage: the contract
-    // check, the range collect, and the staging write would otherwise
-    // each re-run it — 3× an arbitrarily expensive CDC pipeline
-    // (review finding, r17). Deltas are the SMALL side by design;
-    // MEMORY_AND_DISK spills rather than OOMs if one is not.
-    val delta = deltaIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val held = new Held(deltaIn)
     try Published.withLeaseAwaiting(loc, s"snap:${loc.getName}") {
       val m = traced("merge.head")(head(spark, loc).getOrElse(
         sys.error(s"snap $loc: merge into a table that never committed")))
@@ -1317,11 +1326,11 @@ object Snap {
       // previous attempt whose checkpoint commit was lost — skip it
       val v =
         if (appliedStamp.exists(_ <= m.applied)) m.version
-        else mergeResolved(spark, loc, m, delta, deletedCol, autoOptimize,
+        else mergeResolved(spark, loc, m, held, deletedCol, autoOptimize,
           appliedStamp)
       maybeAutoVacuum(spark, loc, autoVacuum)
       v
-    } finally delta.unpersist()
+    } finally held.release()
   }
 
   /** Retention wired into the write path — the r16 "compactor nothing
@@ -1376,57 +1385,171 @@ object Snap {
         "a different deletedCol (the delete flag may not shadow data)")
   }
 
-  /** The merge contract, refused loudly BEFORE any staging: full
-    * schema (names AND types), a boolean delete flag, one non-null-
-    * keyed row per key with a non-null flag. */
-  private[sources] def contractCheck(m: SnapManifest, delta: DataFrame,
-                            deletedCol: String): Unit = {
-    contractCheckSchema(m, delta, deletedCol)
-    val keyEx = m.keyCols.map(col)
-    // contract guards in ONE pass: at most one delta row per key (a
-    // dup makes "latest-wins" order-dependent), no null key values
-    // (nulls neither match deletes through the anti-join nor carry
-    // stats), and no null in the deleted flag — filter(!col) would
-    // silently DROP a _deleted=NULL row from the upserts while its
-    // key still anti-joins the existing row away: a silent row loss,
-    // against this module's loud-refusal discipline (r17 advice)
-    val bad = delta.groupBy(keyEx: _*)
-      .agg(count(lit(1)).as("count"),
-        count(when(col(deletedCol).isNull, 1)).as("null_del"))
-      .filter(col("count") > 1 || col("null_del") > 0 ||
-        m.keyCols.map(col(_).isNull).reduce(_ || _))
-      .limit(1).count()
-    require(bad == 0, contractMsg(deletedCol))
-  }
-
   private def contractMsg(deletedCol: String): String =
     "delta carries duplicate keys, null keys, or a null " +
       s"$deletedCol flag — resolve to one non-null-keyed row per key with " +
       "an explicit true/false delete flag before merging"
 
-  /** [[contractCheck]]'s data pass and [[deltaRanges]] FUSED into one
-    * Spark job (r20 optimization): per-commit fixed cost is the s05–s09
-    * lifecycle benches' dominant term, and the two actions read the
-    * same persisted delta to answer per-key questions (the contract)
-    * and per-bucket questions (the ranges). One two-level aggregation
-    * — keys, then buckets — answers both with one collect of ≤ buckets
-    * rows. min/max stay distributive across the levels (per-key min of
-    * a contract-clean delta is the row itself), and the refusal fires
-    * BEFORE the ranges are used, so a violating delta never plans. */
-  private[sources] final case class ContractInfo(
-      ranges: Map[Int, (String, String)], deltaRows: Long)
+  /** What the contract pass learned of a delta: the per-bucket key
+    * ranges (typed min/max of `bucketCol` over every delta row, deleted
+    * rows included, stringified as `cast(string)` does — the planning
+    * metadata that makes the rewrite set file-granular), the exact row
+    * count, and, when the driver path ran, the delta's keys as a local
+    * relation: the broadcast side of the merge's anti-join. */
+  private[graft] final case class ContractInfo(
+      ranges: Map[Int, (String, String)], deltaRows: Long,
+      localKeys: Option[DataFrame])
 
-  private[sources] def contractCheckWithRanges(
-      m: SnapManifest, delta: DataFrame,
-      deletedCol: String): ContractInfo = {
+  /** The merge contract, refused loudly BEFORE anything plans or
+    * stages: full schema (names AND types), a boolean delete flag, one
+    * non-null-keyed row per key with a non-null flag — checked by
+    * [[contractPass]], which also returns the planning metadata. */
+  private[sources] def mergeContract(spark: SparkSession, m: SnapManifest,
+                                     delta: DataFrame,
+                                     deletedCol: String): ContractInfo = {
     contractCheckSchema(m, delta, deletedCol)
+    contractPass(spark, m, delta, Some(deletedCol), contractMsg(deletedCol))
+  }
+
+  /** UnsafeRow-ish size of one delta key row: per-field default size +
+    * 16B row overhead — the estimate the contract pass's driver bound,
+    * and with it the anti-join's broadcast hint, is taken against. */
+  private def keyRowBytes(m: SnapManifest): Long =
+    m.keyCols.map(k => m.schema(k).dataType.defaultSize.toLong).sum + 16L
+
+  /** Key types whose UnsafeRow bytes are equal exactly when Spark's
+    * hash group-by calls the values equal (floats and doubles once
+    * [[normalizedKey]] has run). Any other key type — nested, collated
+    * strings, intervals — takes the distributed contract path. */
+  private def driverKeyType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         FloatType | DoubleType | DateType | TimestampType |
+         TimestampNTZType | BinaryType | _: DecimalType => true
+    case st: StringType => st == StringType
+    case _ => false
+  }
+
+  /** -0.0 → 0.0 and one NaN, as the group-by's own float normalization
+    * does, so byte equality of the driver's key rows is group-by
+    * equality. Other types pass through. */
+  private def normalizedKey(c: Column, dt: DataType): Column = dt match {
+    case FloatType | DoubleType =>
+      when(isnan(c), lit(Double.NaN).cast(dt))
+        .when(c === lit(0), lit(0).cast(dt)).otherwise(c)
+    case _ => c
+  }
+
+  /** The contract's data pass and the per-bucket ranges, for every snap
+    * write ([[merge]], [[mergeOcc]], [[mergeMor]], [[deleteVector]],
+    * [[SnapBranch.merge]]): one non-null-keyed row per key and, when
+    * `deletedCol` is given, a non-null delete flag — `filter(!col)`
+    * would silently DROP a flag=NULL row from the upserts while its key
+    * still anti-joins the existing row away. A violation refuses with
+    * `refusal` before the ranges are used, so it never plans.
+    *
+    * Driver path, taken when the delta's keys fit the bound the merge
+    * hints its broadcast under (rows × [[keyRowBytes]] ≤
+    * `spark.sql.autoBroadcastJoinThreshold`): ONE Spark job collects the
+    * projection (key columns, `isnull(flag)`, [[bucketExpr]]), each
+    * partition returning at most bound + 1 rows. Spark evaluates the
+    * projection, so bucket assignment is the staging write's own
+    * expression. The driver then checks the contract (key equality is
+    * UnsafeRow byte equality over normalized keys — the hash group-by's
+    * equality), folds the ranges and counts the rows, and the same rows
+    * become the anti-join's broadcast side as a local relation instead
+    * of a second scan of the delta. Rows stop being kept the moment the
+    * running total passes the bound, so driver memory stays within a
+    * small multiple of the threshold.
+    *
+    * Distributed path — a delta past the bound, a disabled threshold
+    * (≤ 0) or a key type outside [[driverKeyType]]: the two-level
+    * aggregation (keys, then buckets) that collects ≤ buckets rows;
+    * min/max stay distributive across the levels, and the merge keeps
+    * the un-hinted join (AQE picks the strategy from real sizes, the
+    * MEMORY_AND_DISK persist spills instead of OOMing). */
+  private[graft] def contractPass(spark: SparkSession, m: SnapManifest,
+                                  delta: DataFrame, deletedCol: Option[String],
+                                  refusal: String): ContractInfo = {
+    val threshold = org.apache.spark.sql.internal.SQLConf.get
+      .autoBroadcastJoinThreshold
+    val driverPath = threshold > 0 &&
+      m.keyCols.forall(k => driverKeyType(delta.schema(k).dataType))
+    val local =
+      if (!driverPath) None
+      else driverContract(spark, m, delta, deletedCol, refusal,
+        math.min(threshold / keyRowBytes(m), Int.MaxValue - 1L).toInt)
+    local.getOrElse(distributedContract(m, delta, deletedCol, refusal))
+  }
+
+  /** [[contractPass]]'s driver path; None when the delta holds more
+    * than `maxRows` rows. */
+  private def driverContract(spark: SparkSession, m: SnapManifest,
+                             delta: DataFrame, deletedCol: Option[String],
+                             refusal: String,
+                             maxRows: Int): Option[ContractInfo] = {
+    val nKeys = m.keyCols.size
+    val proj = delta.select(
+      struct(m.keyCols.map(k =>
+        normalizedKey(col(k), delta.schema(k).dataType).as(k)): _*).as("k"),
+      deletedCol.fold(lit(false))(d => col(d).isNull).as("nd"),
+      bucketExpr(m, identity).as("b"))
+    val schema = proj.schema
+    val rdd = proj.queryExecution.toRdd
+    val cap = maxRows + 1
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Array[InternalRow]]
+    var total = 0L
+    spark.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => {
+        val unsafe = UnsafeProjection.create(schema)
+        it.take(cap).map(r => unsafe(r).copy(): InternalRow).toArray
+      },
+      (_: Int, part: Array[InternalRow]) => {
+        total += part.length
+        if (total <= maxRows) kept += part else kept.clear()
+        ()
+      })
+    if (total > maxRows) return None
+    val keyType = schema("k").dataType.asInstanceOf[StructType]
+    val bIdx = m.keyCols.indexOf(m.bucketCol)
+    val bType = keyType(bIdx).dataType
+    val integral = m.keyKind == "long"
+    def bucketKey(k: InternalRow): Any =
+      if (integral) k.get(bIdx, bType).asInstanceOf[Number].longValue
+      else k.getUTF8String(bIdx)
+    def below(a: Any, b: Any): Boolean =
+      if (integral) a.asInstanceOf[Long] < b.asInstanceOf[Long]
+      else a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String]) < 0
+    val seen = new java.util.HashSet[InternalRow]()
+    val ranges = scala.collection.mutable.HashMap.empty[Int, (Any, Any)]
+    val keys = new java.util.ArrayList[Row](total.toInt)
+    val toRow = CatalystTypeConverters.createToScalaConverter(keyType)
+    kept.foreach(_.foreach { r =>
+      val k = r.getStruct(0, nKeys)
+      require(!r.getBoolean(1) && (0 until nKeys).forall(!k.isNullAt(_)) &&
+        seen.add(k), refusal)
+      val v = bucketKey(k)
+      val b = r.getInt(2)
+      ranges(b) = ranges.get(b).fold((v, v)) { case (mn, mx) =>
+        (if (below(v, mn)) v else mn, if (below(mx, v)) v else mx) }
+      keys.add(toRow(k).asInstanceOf[Row])
+    })
+    Some(ContractInfo(
+      ranges.map { case (b, (mn, mx)) => b -> (mn.toString, mx.toString) }.toMap,
+      total, Some(spark.createDataFrame(keys, keyType))))
+  }
+
+  /** [[contractPass]]'s distributed path: keys, then buckets. */
+  private def distributedContract(m: SnapManifest, delta: DataFrame,
+                                  deletedCol: Option[String],
+                                  refusal: String): ContractInfo = {
     val keyEx = m.keyCols.map(col)
     val anyNullKey = m.keyCols.map(col(_).isNull).reduce(_ || _)
+    val nullFlag = deletedCol.fold(lit(false))(d => col(d).isNull)
     val rows = delta
       .withColumn("_b", bucketExpr(m, identity))
       .groupBy(keyEx: _*)
       .agg(count(lit(1)).as("cnt"),
-        count(when(col(deletedCol).isNull, 1)).as("null_del"),
+        count(when(nullFlag, 1)).as("null_del"),
         max(when(anyNullKey, 1).otherwise(0)).as("null_key"),
         min(col("_b")).as("_b"),
         min(col(m.bucketCol)).as("kmn"),
@@ -1441,23 +1564,11 @@ object Snap {
       .collect()
     require(!rows.exists(r => r.getAs[Long]("max_cnt") > 1 ||
         r.getAs[Long]("null_del") > 0 || r.getAs[Int]("null_key") > 0),
-      contractMsg(deletedCol))
+      refusal)
     ContractInfo(
       rows.map(r => r.getAs[Int]("_b") ->
         (r.getAs[String]("mn"), r.getAs[String]("mx"))).toMap,
-      rows.map(_.getAs[Long]("rows")).sum)
-  }
-
-  /** Per-bucket delta key ranges: ≤ buckets rows to the driver — the
-    * planning metadata that makes the rewrite set file-granular. */
-  private def deltaRanges(m: SnapManifest,
-                          delta: DataFrame): Map[Int, (String, String)] = {
-    val bEx = bucketExpr(m, identity)
-    delta.withColumn("_b", bEx).groupBy(col("_b"))
-      .agg(min(col(m.bucketCol)).cast("string").as("mn"),
-        max(col(m.bucketCol)).cast("string").as("mx"))
-      .collect()
-      .map(r => r.getInt(0) -> (r.getString(1), r.getString(2))).toMap
+      rows.map(_.getAs[Long]("rows")).sum, None)
   }
 
   /** Can file `f` hold a key in the delta's per-bucket ranges? Always
@@ -1487,9 +1598,6 @@ object Snap {
                                      foldDvs: Seq[SnapFile],
                                      carryDvs: Seq[SnapFile])
 
-  private[sources] def planMerge(m: SnapManifest, delta: DataFrame): MergePlan =
-    planMergeWithRanges(m, deltaRanges(m, delta))
-
   private[sources] def planMergeWithRanges(
       m: SnapManifest, ranges: Map[Int, (String, String)]): MergePlan = {
     val touched = ranges.keySet
@@ -1514,48 +1622,41 @@ object Snap {
 
   /** Survivors of the rewritten files (with any folding deltas
     * applied) ∪ the upserts; the anti-join's build side is the delta's
-    * keys. When the contract job has already COUNTED the delta's rows
-    * and the keys provably fit a broadcast, the hint is explicit (r21,
-    * guide §3.1: a known-small side should broadcast deliberately, not
-    * via AQE's detour of materializing the exchange first — that
-    * detour is one extra job per commit). A delta past the session's
-    * broadcast threshold keeps the un-hinted join: AQE picks the
-    * strategy from real sizes and the MEMORY_AND_DISK persist spills
-    * instead of OOMing — the graceful-degradation path is unchanged. */
+    * keys. When [[contractPass]] took its driver path it hands over
+    * those keys as a local relation (`localKeys`), and the hint is
+    * explicit: the keys provably fit the session's broadcast threshold,
+    * and a known-small side should broadcast deliberately, not via
+    * AQE's detour of materializing the exchange first — that detour is
+    * one extra job per commit. A delta past the bound keeps the
+    * un-hinted join over its persisted keys: AQE picks the strategy
+    * from real sizes and the MEMORY_AND_DISK persist spills instead of
+    * OOMing — the graceful-degradation path. */
   private[sources] def mergedFrame(spark: SparkSession, loc: HPath, m: SnapManifest,
                           delta: DataFrame, deletedCol: String,
                           plan: MergePlan,
-                          deltaRows: Option[Long] = None): DataFrame = {
+                          localKeys: Option[DataFrame]): DataFrame = {
     val upserts = delta.filter(!col(deletedCol))
       .select(m.schema.fieldNames.map(col).toSeq: _*)
-    val deltaKeys = delta.select(m.keyCols.map(col): _*)
-    // UnsafeRow-ish estimate: per-field default size + 16B row overhead
-    val keyRowBytes = m.keyCols.map(k =>
-      m.schema(k).dataType.defaultSize.toLong).sum + 16L
-    val threshold = org.apache.spark.sql.internal.SQLConf.get
-      .autoBroadcastJoinThreshold
-    val build = deltaRows match {
-      case Some(n) if threshold > 0 && n * keyRowBytes <= threshold =>
-        broadcast(deltaKeys)
-      case _ => deltaKeys
-    }
+    val build = localKeys.map(broadcast)
+      .getOrElse(delta.select(m.keyCols.map(col): _*))
     morApplied(spark, loc, m, plan.rewrite, plan.foldDeltas, plan.foldDvs)
       .join(build, m.keyCols, "left_anti")
       .unionByName(upserts)
   }
 
   private def mergeResolved(spark: SparkSession, loc: HPath,
-                            m: SnapManifest, delta: DataFrame,
+                            m: SnapManifest, held: Held,
                             deletedCol: String, autoOptimize: Int,
                             appliedStamp: Option[Long]): Int = {
     {
       val gate = () => Published.assertLeaseOwned(loc)
       val fs = Published.fsOf(loc)
+      val delta = held.frame
       val info = traced("merge.contractCheck")(
-        contractCheckWithRanges(m, delta, deletedCol))
+        mergeContract(spark, m, delta, deletedCol))
       val plan = traced("merge.planMerge")(planMergeWithRanges(m, info.ranges))
       val merged = mergedFrame(spark, loc, m, delta, deletedCol, plan,
-        Some(info.deltaRows))
+        info.localKeys)
 
       val token = newToken()
       val next = m.version + 1
@@ -1586,7 +1687,7 @@ object Snap {
           .groupBy(_.bucket).valuesIterator.exists(_.size >= autoOptimize)) {
         // the fold never touches the delta — release its cached blocks
         // before a rewrite that may need that executor memory
-        delta.unpersist()
+        held.release()
         optimize(spark, loc, minFilesPerBucket = autoOptimize) // re-entrant lease
       } else next
     }
@@ -1634,7 +1735,8 @@ object Snap {
     *     its deltas — `autoOptimize` arms it on this commit's own
     *     lease hold, the same self-contained story as [[merge]]'s;
     *   - any later copy-on-write merge that touches a bucket folds
-    *     that bucket's deltas as part of its rewrite ([[planMerge]]).
+    *     that bucket's deltas as part of its rewrite
+    *     ([[planMergeWithRanges]]).
     *
     * Time travel, changelog reads, OCC rivals, vacuum/retention, and
     * the follower all compose: deltas are ordinary immutable manifest
@@ -1653,8 +1755,8 @@ object Snap {
     require(autoOptimize == 0 || autoOptimize >= 2,
       "autoOptimize must be 0 (off) or >= 2")
     require(autoVacuum >= 0, "autoVacuum must be 0 (off) or >= 1")
-    val delta = deltaIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val held = new Held(deltaIn)
+    val delta = held.frame
     try Published.withLeaseAwaiting(loc, s"snap:${loc.getName}") {
       val m = head(spark, loc).getOrElse(
         sys.error(s"snap $loc: mergeMor into a table that never committed"))
@@ -1663,7 +1765,7 @@ object Snap {
         else {
           val gate = () => Published.assertLeaseOwned(loc)
           val fs = Published.fsOf(loc)
-          contractCheck(m, delta, deletedCol)
+          mergeContract(spark, m, delta, deletedCol)
           val next = m.version + 1
           val token = newToken()
           // the delta rows THEMSELVES are the commit payload; extra
@@ -1685,13 +1787,13 @@ object Snap {
           if (autoOptimize > 0 && (mn.files ++ mn.deltas ++ mn.dvs)
               .groupBy(_.bucket)
               .valuesIterator.exists(_.size >= autoOptimize)) {
-            delta.unpersist()
+            held.release()
             optimize(spark, loc, minFilesPerBucket = autoOptimize)
           } else next
         }
       maybeAutoVacuum(spark, loc, autoVacuum)
       v
-    } finally delta.unpersist()
+    } finally held.release()
   }
 
   /** Exactly-once streaming form of [[mergeMor]] — the trickle-CDC
@@ -1736,8 +1838,8 @@ object Snap {
     require(autoOptimize == 0 || autoOptimize >= 2,
       "autoOptimize must be 0 (off) or >= 2")
     require(autoVacuum >= 0, "autoVacuum must be 0 (off) or >= 1")
-    val del = delIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val held = new Held(delIn)
+    val del = held.frame
     try Published.withLeaseAwaiting(loc, s"snap:${loc.getName}") {
       val m = head(spark, loc).getOrElse(
         sys.error(s"snap $loc: deleteVector into a table that never committed"))
@@ -1747,14 +1849,15 @@ object Snap {
           val gate = () => Published.assertLeaseOwned(loc)
           val fs = Published.fsOf(loc)
           val keys = del.select(m.keyCols.map(col): _*)
-          val ranges = dvContractCheckWithRanges(m, del)
+          val info = dvContract(spark, m, del)
+          val ranges = info.ranges
           val targets = m.files.filter(fileIntersects(m.keyKind, ranges))
           val next = m.version + 1
           val token = newToken()
           val hits = readFiles(spark, loc, m, targets, withPos = true)
             .select((m.keyCols.map(col) :+ col(FileNameCol) :+
               col(RowPosCol)): _*)
-            .join(keys, m.keyCols, "left_semi")
+            .join(info.localKeys.getOrElse(keys), m.keyCols, "left_semi")
           val newDvs = stageDvFiles(spark, loc, m, hits, targets, next,
             token, gate)
           graft.RestartKit.crashWindow("snapstage", SnapHaltEnv)
@@ -1789,23 +1892,21 @@ object Snap {
           if (autoOptimize > 0 && (mn.files ++ mn.deltas ++ mn.dvs)
               .groupBy(_.bucket)
               .valuesIterator.exists(_.size >= autoOptimize)) {
-            del.unpersist()
+            held.release()
             optimize(spark, loc, minFilesPerBucket = autoOptimize)
           } else next
         }
       maybeAutoVacuum(spark, loc, autoVacuum)
       v
-    } finally del.unpersist()
+    } finally held.release()
   }
 
   /** The deleteVector contract: key columns present under the table's
-    * types, one row per key, no null key values. */
-  /** The deleteVector contract (key columns present and typed, one
-    * non-null-keyed row per key) and [[deltaRanges]] fused into one
-    * job — the same per-commit fixed-cost fold as
-    * [[contractCheckWithRanges]], for the deletion-vector commit. */
-  private def dvContractCheckWithRanges(
-      m: SnapManifest, del: DataFrame): Map[Int, (String, String)] = {
+    * types, one non-null-keyed row per key — the input has no delete
+    * flag — checked with the ranges by the same [[contractPass]] every
+    * merge runs. */
+  private def dvContract(spark: SparkSession, m: SnapManifest,
+                         del: DataFrame): ContractInfo = {
     require(m.keyCols.forall(del.columns.contains),
       s"deleteVector input is missing key columns: " +
         m.keyCols.filterNot(del.columns.contains).mkString(","))
@@ -1814,27 +1915,8 @@ object Snap {
     require(mistyped.isEmpty,
       "deleteVector key column types diverge from the table schema: " +
         mistyped.mkString(","))
-    val keyEx = m.keyCols.map(col)
-    val anyNullKey = m.keyCols.map(col(_).isNull).reduce(_ || _)
-    val rows = del
-      .withColumn("_b", bucketExpr(m, identity))
-      .groupBy(keyEx: _*)
-      .agg(count(lit(1)).as("cnt"),
-        max(when(anyNullKey, 1).otherwise(0)).as("null_key"),
-        min(col("_b")).as("_b"),
-        min(col(m.bucketCol)).as("kmn"),
-        max(col(m.bucketCol)).as("kmx"))
-      .groupBy(col("_b"))
-      .agg(max(col("cnt")).as("max_cnt"),
-        max(col("null_key")).as("null_key"),
-        min(col("kmn")).cast("string").as("mn"),
-        max(col("kmx")).cast("string").as("mx"))
-      .collect()
-    require(!rows.exists(r => r.getAs[Long]("max_cnt") > 1 ||
-        r.getAs[Int]("null_key") > 0),
+    contractPass(spark, m, del, None,
       "deleteVector input carries duplicate or null keys")
-    rows.map(r => r.getAs[Int]("_b") ->
-      (r.getAs[String]("mn"), r.getAs[String]("mx"))).toMap
   }
 
   /** Stage + promote the per-target DV files: the hits frame
@@ -1971,8 +2053,8 @@ object Snap {
       "autoOptimize must be 0 (off) or >= 2")
     require(autoVacuum >= 0, "autoVacuum must be 0 (off) or >= 1")
     val fs = Published.fsOf(loc)
-    val delta = deltaIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val held = new Held(deltaIn)
+    val delta = held.frame
     val (v, cm) = try {
       var out: Option[(Int, SnapManifest)] = None
       var attempt = 0
@@ -1985,10 +2067,10 @@ object Snap {
         val m = head(spark, loc).getOrElse(
           sys.error(s"snap $loc: merge into a table that never committed"))
         if (appliedStamp.exists(_ <= m.applied)) return m.version
-        val occInfo = contractCheckWithRanges(m, delta, deletedCol)
+        val occInfo = mergeContract(spark, m, delta, deletedCol)
         val plan = planMergeWithRanges(m, occInfo.ranges)
         val merged = mergedFrame(spark, loc, m, delta, deletedCol, plan,
-          Some(occInfo.deltaRows))
+          occInfo.localKeys)
         val token = newToken()
         occTrace(s"attempt=$attempt stage_start=${System.currentTimeMillis()}")
         val staged = stageWrite(spark, loc, m, merged, m.version + 1, token,
@@ -2102,7 +2184,7 @@ object Snap {
         out = committed
       }
       out.get
-    } finally delta.unpersist()
+    } finally held.release()
     // post-commit housekeeping OUTSIDE the cache scope (the fold may
     // want the delta's executor memory back). The fold trigger reads
     // the committed manifest IN HAND — never atVersion(v), which a

@@ -139,17 +139,17 @@ object SnapBranch {
   def merge(spark: SparkSession, loc: HPath, name: String,
             deltaIn: DataFrame, deletedCol: String = "_deleted"): Int = {
     assertName(name)
-    val delta = deltaIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val held = new Snap.Held(deltaIn)
+    val delta = held.frame
     try Published.withLeaseAwaiting(loc, s"snap:${loc.getName}") {
       val gate = () => Published.assertLeaseOwned(loc)
       val fs = Published.fsOf(loc)
       val bh = head(spark, loc, name).getOrElse(
         sys.error(s"snap branch $name@$loc never committed — create first"))
-      val info = Snap.contractCheckWithRanges(bh, delta, deletedCol)
+      val info = Snap.mergeContract(spark, bh, delta, deletedCol)
       val plan = Snap.planMergeWithRanges(bh, info.ranges)
       val merged = Snap.mergedFrame(spark, loc, bh, delta, deletedCol, plan,
-        Some(info.deltaRows))
+        info.localKeys)
       val token = Snap.newToken()
       val next = bh.version + 1
       val files = plan.carry ++ Snap.stageDataFiles(spark, loc, bh, merged,
@@ -159,7 +159,7 @@ object SnapBranch {
           files = files, op = "merge", base = bh.base,
           deltas = plan.carryDeltas, dvs = plan.carryDvs), gate)
       next
-    } finally delta.unpersist()
+    } finally held.release()
   }
 
   /** Publish: fast-forward main to the branch head as ONE `publish`

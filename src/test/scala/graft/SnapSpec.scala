@@ -57,6 +57,88 @@ class SnapSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
+  /** The contract pass's three routes, by broadcast threshold: the
+    * driver path (the session default), its overflow fallback (a
+    * threshold no key row fits) and the distributed path (disabled). */
+  private val contractPaths =
+    Seq("driver" -> None, "overflow" -> Some("1"), "distributed" -> Some("-1"))
+
+  private def onPath[T](threshold: Option[String])(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    threshold.foreach(spark.conf.set(key, _))
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A committed head: version, file set (carried and rewritten alike,
+    * with their stats) and rows. */
+  private type Committed =
+    (Int, Set[(String, Int, Long, String, String)], Set[String])
+
+  /** What a write left at `loc`: the refusal, or the committed head. */
+  private def outcome(loc: HPath)(write: => Unit): Either[String, Committed] = {
+    val before = Snap.head(spark, loc).get.version
+    try {
+      write
+      val h = Snap.head(spark, loc).get
+      Right((h.version,
+        h.files.map(f => (f.path, f.bucket, f.rows, f.min, f.max)).toSet,
+        rows(Snap.read(spark, loc))))
+    } catch { case e: IllegalArgumentException =>
+      assert(Snap.head(spark, loc).get.version == before,
+        "a refused write committed")
+      Left(e.getMessage)
+    }
+  }
+
+  /** `write` on a fresh `create()`d table once per contract path; the
+    * outcomes must agree. Returns the (shared) outcome. */
+  private def samePathOutcome(create: HPath => Unit)(
+      write: HPath => Unit): Either[String, Committed] = {
+    val got = contractPaths.map { case (name, threshold) =>
+      val loc = tmpLoc(s"path_$name")
+      create(loc)
+      name -> onPath(threshold)(outcome(loc)(write(loc)))
+    }
+    got.tail.foreach { case (name, o) =>
+      assert(o == got.head._2, s"$name path: $o, driver path: ${got.head._2}")
+    }
+    got.head._2
+  }
+
+  /** Spark jobs `body` starts on this thread. A listener counts the
+    * jobs carrying this call's local property; a marker job run after
+    * `body` closes the count, because the listener sees job starts in
+    * submission order. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val prop = "graft.spec.jobCount"
+    val tag = s"count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
+          case Some(`tag`) => jobs.incrementAndGet(); ()
+          case Some(t) if t == tag + "-end" => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      val out = try body finally sc.setLocalProperty(prop, tag + "-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start never reached the listener")
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("create + read round-trip, both layouts") {
     for (layout <- Seq("hash", "range")) {
       val loc = tmpLoc(s"rt_$layout")
@@ -563,21 +645,41 @@ class SnapSpec extends SparkSpec {
     val loc = tmpLoc("guard")
     Snap.create(spark, loc, cust, Seq("c_custkey"), "c_custkey", 4,
       layout = "range", tag = "t")
-    val dup = smallDelta.unionByName(smallDelta)
-    intercept[IllegalArgumentException] { Snap.merge(spark, loc, dup) }
+    val keyType = cust.schema("c_custkey").dataType
+    // the data guards refuse on every contract path
+    for ((name, threshold) <- contractPaths) onPath(threshold) {
+      withClue(s"$name path: ") {
+        val dup = smallDelta.unionByName(smallDelta)
+        intercept[IllegalArgumentException] { Snap.merge(spark, loc, dup) }
+        // a NULL _deleted flag refuses loudly — filter(!col) would
+        // silently drop the row from the upserts while its key still
+        // anti-joins the existing row away: a silent row loss
+        intercept[IllegalArgumentException] {
+          Snap.merge(spark, loc, smallDelta.withColumn("_deleted",
+            when(col("c_custkey") === 5, lit(null).cast("boolean"))
+              .otherwise(col("_deleted"))))
+        }
+        // a NULL key neither matches through the anti-join nor carries
+        // stats
+        val nullKey = smallDelta.withColumn("c_custkey",
+          when(col("c_custkey") === 5, lit(null).cast(keyType))
+            .otherwise(col("c_custkey")))
+        intercept[IllegalArgumentException] { Snap.merge(spark, loc, nullKey) }
+        intercept[IllegalArgumentException] { Snap.mergeOcc(spark, loc, dup) }
+        intercept[IllegalArgumentException] { Snap.mergeMor(spark, loc, dup) }
+        intercept[IllegalArgumentException] {
+          Snap.deleteVector(spark, loc, dup.select(col("c_custkey")))
+        }
+        intercept[IllegalArgumentException] {
+          Snap.deleteVector(spark, loc, nullKey.select(col("c_custkey")))
+        }
+      }
+    }
     intercept[IllegalArgumentException] {
       Snap.merge(spark, loc, smallDelta.drop("c_mktsegment"))
     }
     intercept[IllegalArgumentException] {
       Snap.merge(spark, loc, smallDelta.drop("_deleted"))
-    }
-    // a NULL _deleted flag refuses loudly — filter(!col) would silently
-    // drop the row from the upserts while its key still anti-joins the
-    // existing row away: a silent row loss (r17 advice, medium)
-    intercept[IllegalArgumentException] {
-      Snap.merge(spark, loc, smallDelta.withColumn("_deleted",
-        when(col("c_custkey") === 5, lit(null).cast("boolean"))
-          .otherwise(col("_deleted"))))
     }
     assert(Snap.head(spark, loc).get.version == 1, "a refused merge committed")
     // a TABLE column named like the flag would silently double as the
@@ -599,6 +701,92 @@ class SnapSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Snap.changes(spark, cloc, 1, 1)
     }
+  }
+
+  test("contract pass: driver, overflow and distributed paths refuse and " +
+      "commit alike — composite, string-hash and signed-zero keys") {
+    def createOn(df: DataFrame, keys: Seq[String], layout: String)(
+        loc: HPath): Unit =
+      Snap.create(spark, loc, df, keys, "c_custkey", 4, layout = layout,
+        tag = "t")
+    // composite (c_custkey, c_name): an exact duplicate refuses; a row
+    // sharing only c_custkey is a distinct key (an insert)
+    val byName = createOn(cust, Seq("c_custkey", "c_name"), "range") _
+    val dupRow = smallDelta.filter(col("c_custkey") === 3)
+    assert(samePathOutcome(byName)(Snap.merge(spark, _,
+      smallDelta.unionByName(dupRow))).isLeft)
+    assert(samePathOutcome(byName)(Snap.merge(spark, _,
+      smallDelta.unionByName(dupRow.withColumn("c_name", lit("other")))))
+      .isRight)
+    // a string key on hash layout: the ranges compare as strings
+    val strKeyed = cust.withColumn("c_custkey", col("c_custkey").cast("string"))
+    val strDelta = smallDelta.withColumn("c_custkey",
+      col("c_custkey").cast("string"))
+    val byString = createOn(strKeyed, Seq("c_custkey"), "hash") _
+    assert(samePathOutcome(byString)(Snap.merge(spark, _, strDelta)).isRight)
+    assert(samePathOutcome(byString)(Snap.merge(spark, _,
+      strDelta.unionByName(strDelta.filter(col("c_custkey") === "7"))))
+      .isLeft)
+    // (c_custkey, k2 double): 0.0 and -0.0 are ONE key to a group-by,
+    // so both in one delta is a duplicate, and -0.0 updates the 0.0 row
+    val signed = cust.withColumn("k2", lit(0.0))
+    val bySigned = createOn(signed, Seq("c_custkey", "k2"), "range") _
+    val five = signed.filter(col("c_custkey") === 5)
+      .withColumn("c_acctbal", lit(-1.0)).withColumn("_deleted", lit(false))
+    assert(samePathOutcome(bySigned)(Snap.merge(spark, _,
+      five.unionByName(five.withColumn("k2", lit(-0.0))))).isLeft)
+    val updated = samePathOutcome(bySigned)(Snap.merge(spark, _,
+      five.withColumn("k2", lit(-0.0))))
+    val fiveRows = updated.toOption.get._3.filter(_.startsWith("5|"))
+    assert(fiveRows.size == 1 && fiveRows.head.contains("|-1.0|"), fiveRows)
+  }
+
+  test("a caller-cached delta stays cached through every snap write; an " +
+      "uncached one is released") {
+    val loc = tmpLoc("callercache")
+    Snap.create(spark, loc, cust, Seq("c_custkey"), "c_custkey", 4,
+      layout = "range", tag = "t")
+    val d = smallDelta.persist()
+    try {
+      d.count()
+      Snap.merge(spark, loc, d)
+      assert(d.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "merge evicted the caller's cache entry")
+      Snap.mergeOcc(spark, loc, d)
+      Snap.mergeMor(spark, loc, d)
+      Snap.deleteVector(spark, loc, d.filter(col("_deleted")))
+      graft.sources.SnapBranch.create(spark, loc, "cached")
+      graft.sources.SnapBranch.merge(spark, loc, "cached", d)
+      assert(d.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "a snap write evicted the caller's cache entry")
+    } finally { d.unpersist(); () }
+    val fresh = smallDelta
+    Snap.merge(spark, loc, fresh)
+    assert(fresh.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "merge left its own persist of the delta behind")
+  }
+
+  test("a small-delta merge runs at most 4 Spark jobs; its contract pass " +
+      "is one job and agrees with the distributed pass") {
+    val loc = tmpLoc("jobs")
+    Snap.create(spark, loc, cust, Seq("c_custkey"), "c_custkey", 4,
+      layout = "range", tag = "t")
+    val m = Snap.head(spark, loc).get
+    val delta = smallDelta
+    val (local, passJobs) = jobsOf(
+      Snap.contractPass(spark, m, delta, Some("_deleted"), "refused"))
+    assert(passJobs == 1, s"the contract pass ran $passJobs jobs")
+    assert(local.localKeys.isDefined, "the driver path was not taken")
+    val distributed = onPath(Some("-1"))(
+      Snap.contractPass(spark, m, delta, Some("_deleted"), "refused"))
+    assert(distributed.localKeys.isEmpty)
+    assert(local.ranges == distributed.ranges)
+    assert(local.deltaRows == delta.count() &&
+      distributed.deltaRows == local.deltaRows)
+    val (v, mergeJobs) = jobsOf(Snap.merge(spark, loc, delta))
+    assert(v == 2)
+    assert(mergeJobs <= 4, s"a small-delta merge ran $mergeJobs jobs")
+    assert(rows(Snap.read(spark, loc)) == rows(expectedAfterSmallDelta))
   }
 
   test("create refuses a string key on range layout and a reserved '_b' " +
