@@ -1,9 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{ClassicConversions, Dataset => ClassicDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType, DataType,
   DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType,
@@ -65,9 +69,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale ledger: driver state is O(buckets + versions·files) manifest
   * METADATA plus, per write, at most a broadcast threshold's worth of
-  * delta KEYS ([[contractPass]]'s driver path, bounded and skipped for
-  * larger deltas). The other collects are per-bucket stat rows
-  * (≤ buckets) and manifest listings (≤ versions, vacuum-bounded).
+  * delta KEYS ([[contractPass]]'s driver path, bounded in what its one
+  * job returns in all; a larger delta falls back). The other collects
+  * are per-bucket stat rows (≤ buckets) and manifest listings
+  * (≤ versions, vacuum-bounded).
   */
 object Snap {
 
@@ -1394,11 +1399,22 @@ object Snap {
     * ranges (typed min/max of `bucketCol` over every delta row, deleted
     * rows included, stringified as `cast(string)` does — the planning
     * metadata that makes the rewrite set file-granular), the exact row
-    * count, and, when the driver path ran, the delta's keys as a local
-    * relation: the broadcast side of the merge's anti-join. */
+    * count, and, when the driver path ran, the delta's keys as the
+    * driver holds them: UnsafeRows of `keyType`, float keys normalized. */
   private[graft] final case class ContractInfo(
       ranges: Map[Int, (String, String)], deltaRows: Long,
-      localKeys: Option[DataFrame])
+      keyRows: Option[(StructType, Seq[InternalRow])]) {
+
+    /** The driver path's keys as a local relation over the held rows —
+      * built on demand, so a write that joins nothing against the keys
+      * ([[mergeMor]]) never pays for it. */
+    def localKeys(spark: SparkSession): Option[DataFrame] =
+      keyRows.map { case (keyType, rows) =>
+        new ClassicDataset[Row](ClassicConversions.castToImpl(spark),
+          LocalRelation(DataTypeUtils.toAttributes(keyType), rows),
+          Encoders.row(keyType))
+      }
+  }
 
   /** The merge contract, refused loudly BEFORE anything plans or
     * stages: full schema (names AND types), a boolean delete flag, one
@@ -1416,6 +1432,13 @@ object Snap {
     * and with it the anti-join's broadcast hint, is taken against. */
   private def keyRowBytes(m: SnapManifest): Long =
     m.keyCols.map(k => m.schema(k).dataType.defaultSize.toLong).sum + 16L
+
+  /** Do `rows` delta keys fit the session's broadcast threshold? */
+  private def keysFitBroadcast(m: SnapManifest, rows: Long): Boolean = {
+    val threshold = org.apache.spark.sql.internal.SQLConf.get
+      .autoBroadcastJoinThreshold
+    threshold > 0 && rows * keyRowBytes(m) <= threshold
+  }
 
   /** Key types whose UnsafeRow bytes are equal exactly when Spark's
     * hash group-by calls the values equal (floats and doubles once
@@ -1447,46 +1470,57 @@ object Snap {
     * still anti-joins the existing row away. A violation refuses with
     * `refusal` before the ranges are used, so it never plans.
     *
-    * Driver path, taken when the delta's keys fit the bound the merge
-    * hints its broadcast under (rows × [[keyRowBytes]] ≤
-    * `spark.sql.autoBroadcastJoinThreshold`): ONE Spark job collects the
-    * projection (key columns, `isnull(flag)`, [[bucketExpr]]), each
-    * partition returning at most bound + 1 rows. Spark evaluates the
-    * projection, so bucket assignment is the staging write's own
-    * expression. The driver then checks the contract (key equality is
-    * UnsafeRow byte equality over normalized keys — the hash group-by's
-    * equality), folds the ranges and counts the rows, and the same rows
-    * become the anti-join's broadcast side as a local relation instead
-    * of a second scan of the delta. Rows stop being kept the moment the
-    * running total passes the bound, so driver memory stays within a
-    * small multiple of the threshold.
+    * Driver path, tried whenever the threshold is on and the key types
+    * allow it: ONE Spark job collects the projection (key columns,
+    * `isnull(flag)`, [[bucketExpr]]). Spark evaluates the projection,
+    * so bucket assignment is the staging write's own expression. The
+    * driver then checks the contract (key equality is UnsafeRow byte
+    * equality over normalized keys — the hash group-by's equality),
+    * folds the ranges and counts the rows, and the same rows become
+    * the anti-join's broadcast side as a local relation instead of a
+    * second scan of the delta.
     *
-    * Distributed path — a delta past the bound, a disabled threshold
-    * (≤ 0) or a key type outside [[driverKeyType]]: the two-level
-    * aggregation (keys, then buckets) that collects ≤ buckets rows;
-    * min/max stay distributive across the levels, and the merge keeps
-    * the un-hinted join (AQE picks the strategy from real sizes, the
-    * MEMORY_AND_DISK persist spills instead of OOMing). */
+    * The bound is on what the whole job returns, not on one partition:
+    * each of the delta's P partitions may charge at most budget / P,
+    * a row costing its [[keyRowBytes]] estimate or its real key bytes,
+    * whichever is larger. The budget is the broadcast threshold — so
+    * with fixed-width keys the path holds no delta whose
+    * rows × [[keyRowBytes]] exceed it — capped at a quarter of
+    * `spark.driver.maxResultSize` (a projected row weighs up to about
+    * twice its charge). A partition past its share stops reading and
+    * reports overflow; the job then returns at most about twice the
+    * budget, however many partitions the delta has, and the pass falls
+    * back. A small delta skewed into one of many partitions overflows
+    * too: it merges through the fallback, as before this path existed.
+    *
+    * Distributed path — the fallback, a disabled threshold (≤ 0) or a
+    * key type outside [[driverKeyType]]: the two-level aggregation
+    * (keys, then buckets) that collects ≤ buckets rows; min/max stay
+    * distributive across the levels. A fallback costs one job more
+    * than this path alone would; that job's scan also fills the held
+    * delta's cache, which the aggregation then reads. */
   private[graft] def contractPass(spark: SparkSession, m: SnapManifest,
                                   delta: DataFrame, deletedCol: Option[String],
                                   refusal: String): ContractInfo = {
     val threshold = org.apache.spark.sql.internal.SQLConf.get
       .autoBroadcastJoinThreshold
-    val driverPath = threshold > 0 &&
-      m.keyCols.forall(k => driverKeyType(delta.schema(k).dataType))
+    val resultCap = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val budget = if (resultCap > 0) math.min(threshold, resultCap / 4)
+      else threshold
     val local =
-      if (!driverPath) None
-      else driverContract(spark, m, delta, deletedCol, refusal,
-        math.min(threshold / keyRowBytes(m), Int.MaxValue - 1L).toInt)
+      if (budget > 0 && m.keyCols.forall(k => driverKeyType(delta.schema(k).dataType)))
+        driverContract(spark, m, delta, deletedCol, refusal, budget)
+      else None
     local.getOrElse(distributedContract(m, delta, deletedCol, refusal))
   }
 
-  /** [[contractPass]]'s driver path; None when the delta holds more
-    * than `maxRows` rows. */
+  /** [[contractPass]]'s driver path; None when a partition of the
+    * delta charges more than its share of `budget`. */
   private def driverContract(spark: SparkSession, m: SnapManifest,
                              delta: DataFrame, deletedCol: Option[String],
                              refusal: String,
-                             maxRows: Int): Option[ContractInfo] = {
+                             budget: Long): Option[ContractInfo] = {
     val nKeys = m.keyCols.size
     val proj = delta.select(
       struct(m.keyCols.map(k =>
@@ -1495,20 +1529,28 @@ object Snap {
       bucketExpr(m, identity).as("b"))
     val schema = proj.schema
     val rdd = proj.queryExecution.toRdd
-    val cap = maxRows + 1
-    val kept = scala.collection.mutable.ArrayBuffer.empty[Array[InternalRow]]
-    var total = 0L
+    val share = budget / math.max(rdd.getNumPartitions, 1)
+    val rowCharge = keyRowBytes(m)
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Array[UnsafeRow]]
+    var overflow = false
     spark.sparkContext.runJob(rdd,
       (it: Iterator[InternalRow]) => {
         val unsafe = UnsafeProjection.create(schema)
-        it.take(cap).map(r => unsafe(r).copy(): InternalRow).toArray
+        val out = scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
+        var charged = 0L
+        while (charged <= share && it.hasNext) {
+          val r = unsafe(it.next()).copy()
+          charged += math.max(rowCharge, r.getStruct(0, nKeys).getSizeInBytes)
+          out += r
+        }
+        if (charged > share) null else out.toArray
       },
-      (_: Int, part: Array[InternalRow]) => {
-        total += part.length
-        if (total <= maxRows) kept += part else kept.clear()
+      (_: Int, part: Array[UnsafeRow]) => {
+        if (part == null) { overflow = true; kept.clear() }
+        else if (!overflow) kept += part
         ()
       })
-    if (total > maxRows) return None
+    if (overflow) return None
     val keyType = schema("k").dataType.asInstanceOf[StructType]
     val bIdx = m.keyCols.indexOf(m.bucketCol)
     val bType = keyType(bIdx).dataType
@@ -1521,8 +1563,7 @@ object Snap {
       else a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String]) < 0
     val seen = new java.util.HashSet[InternalRow]()
     val ranges = scala.collection.mutable.HashMap.empty[Int, (Any, Any)]
-    val keys = new java.util.ArrayList[Row](total.toInt)
-    val toRow = CatalystTypeConverters.createToScalaConverter(keyType)
+    val keys = Vector.newBuilder[InternalRow]
     kept.foreach(_.foreach { r =>
       val k = r.getStruct(0, nKeys)
       require(!r.getBoolean(1) && (0 until nKeys).forall(!k.isNullAt(_)) &&
@@ -1531,11 +1572,11 @@ object Snap {
       val b = r.getInt(2)
       ranges(b) = ranges.get(b).fold((v, v)) { case (mn, mx) =>
         (if (below(v, mn)) v else mn, if (below(mx, v)) v else mx) }
-      keys.add(toRow(k).asInstanceOf[Row])
+      keys += k
     })
     Some(ContractInfo(
       ranges.map { case (b, (mn, mx)) => b -> (mn.toString, mx.toString) }.toMap,
-      total, Some(spark.createDataFrame(keys, keyType))))
+      seen.size.toLong, Some(keyType -> keys.result())))
   }
 
   /** [[contractPass]]'s distributed path: keys, then buckets. */
@@ -1622,23 +1663,24 @@ object Snap {
 
   /** Survivors of the rewritten files (with any folding deltas
     * applied) ∪ the upserts; the anti-join's build side is the delta's
-    * keys. When [[contractPass]] took its driver path it hands over
-    * those keys as a local relation (`localKeys`), and the hint is
-    * explicit: the keys provably fit the session's broadcast threshold,
-    * and a known-small side should broadcast deliberately, not via
-    * AQE's detour of materializing the exchange first — that detour is
-    * one extra job per commit. A delta past the bound keeps the
-    * un-hinted join over its persisted keys: AQE picks the strategy
-    * from real sizes and the MEMORY_AND_DISK persist spills instead of
+    * keys. A known-small side broadcasts deliberately, not via AQE's
+    * detour of materializing the exchange first — that detour is one
+    * extra job per commit: when [[contractPass]] took its driver path
+    * its keys broadcast as a local relation (no second scan of the
+    * delta), and when the distributed path counted rows that still fit
+    * the threshold, the delta's key projection broadcasts. A delta past
+    * the threshold keeps the un-hinted join: AQE picks the strategy from
+    * real sizes and the MEMORY_AND_DISK persist spills instead of
     * OOMing — the graceful-degradation path. */
   private[sources] def mergedFrame(spark: SparkSession, loc: HPath, m: SnapManifest,
                           delta: DataFrame, deletedCol: String,
-                          plan: MergePlan,
-                          localKeys: Option[DataFrame]): DataFrame = {
+                          plan: MergePlan, info: ContractInfo): DataFrame = {
     val upserts = delta.filter(!col(deletedCol))
       .select(m.schema.fieldNames.map(col).toSeq: _*)
-    val build = localKeys.map(broadcast)
-      .getOrElse(delta.select(m.keyCols.map(col): _*))
+    val deltaKeys = delta.select(m.keyCols.map(col): _*)
+    val build = info.localKeys(spark).map(broadcast).getOrElse(
+      if (keysFitBroadcast(m, info.deltaRows)) broadcast(deltaKeys)
+      else deltaKeys)
     morApplied(spark, loc, m, plan.rewrite, plan.foldDeltas, plan.foldDvs)
       .join(build, m.keyCols, "left_anti")
       .unionByName(upserts)
@@ -1655,8 +1697,7 @@ object Snap {
       val info = traced("merge.contractCheck")(
         mergeContract(spark, m, delta, deletedCol))
       val plan = traced("merge.planMerge")(planMergeWithRanges(m, info.ranges))
-      val merged = mergedFrame(spark, loc, m, delta, deletedCol, plan,
-        info.localKeys)
+      val merged = mergedFrame(spark, loc, m, delta, deletedCol, plan, info)
 
       val token = newToken()
       val next = m.version + 1
@@ -1857,7 +1898,7 @@ object Snap {
           val hits = readFiles(spark, loc, m, targets, withPos = true)
             .select((m.keyCols.map(col) :+ col(FileNameCol) :+
               col(RowPosCol)): _*)
-            .join(info.localKeys.getOrElse(keys), m.keyCols, "left_semi")
+            .join(info.localKeys(spark).getOrElse(keys), m.keyCols, "left_semi")
           val newDvs = stageDvFiles(spark, loc, m, hits, targets, next,
             token, gate)
           graft.RestartKit.crashWindow("snapstage", SnapHaltEnv)
@@ -2070,7 +2111,7 @@ object Snap {
         val occInfo = mergeContract(spark, m, delta, deletedCol)
         val plan = planMergeWithRanges(m, occInfo.ranges)
         val merged = mergedFrame(spark, loc, m, delta, deletedCol, plan,
-          occInfo.localKeys)
+          occInfo)
         val token = newToken()
         occTrace(s"attempt=$attempt stage_start=${System.currentTimeMillis()}")
         val staged = stageWrite(spark, loc, m, merged, m.version + 1, token,

@@ -149,7 +149,7 @@ object SnapBranch {
       val info = Snap.mergeContract(spark, bh, delta, deletedCol)
       val plan = Snap.planMergeWithRanges(bh, info.ranges)
       val merged = Snap.mergedFrame(spark, loc, bh, delta, deletedCol, plan,
-        info.localKeys)
+        info)
       val token = Snap.newToken()
       val next = bh.version + 1
       val files = plan.carry ++ Snap.stageDataFiles(spark, loc, bh, merged,

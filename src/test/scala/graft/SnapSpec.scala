@@ -106,24 +106,32 @@ class SnapSpec extends SparkSpec {
     got.head._2
   }
 
-  /** Spark jobs `body` starts on this thread. A listener counts the
-    * jobs carrying this call's local property; a marker job run after
-    * `body` closes the count, because the listener sees job starts in
-    * submission order. */
-  private def jobsOf[T](body: => T): (T, Int) = {
+  /** The Spark jobs `body` starts on this thread, in start order, each
+    * with the serialized bytes its tasks returned to the driver. A
+    * listener follows the jobs carrying this call's local property; a
+    * marker job run after `body` closes the record, because the
+    * listener sees events in the order they were posted. */
+  private def jobsOf[T](body: => T): (T, Seq[Long]) = {
+    import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val prop = "graft.spec.jobCount"
     val tag = s"count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    // touched only on the listener's thread, read after the marker
+    val resultBytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val jobOfStage = scala.collection.mutable.HashMap.empty[Int, Int]
     val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
-          case Some(`tag`) => jobs.incrementAndGet(); ()
+          case Some(`tag`) =>
+            e.stageIds.foreach(jobOfStage(_) = resultBytes.size)
+            resultBytes += 0L
           case Some(t) if t == tag + "-end" => marker.countDown()
           case _ => ()
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (j <- jobOfStage.get(e.stageId); tm <- Option(e.taskMetrics))
+          resultBytes(j) += tm.resultSize
     }
     sc.addSparkListener(listener)
     try {
@@ -132,7 +140,7 @@ class SnapSpec extends SparkSpec {
       sc.parallelize(Seq(1), 1).count()
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the marker job's start never reached the listener")
-      (out, jobs.get)
+      (out, resultBytes.toList)
     } finally {
       sc.setLocalProperty(prop, null)
       sc.removeSparkListener(listener)
@@ -775,18 +783,51 @@ class SnapSpec extends SparkSpec {
     val delta = smallDelta
     val (local, passJobs) = jobsOf(
       Snap.contractPass(spark, m, delta, Some("_deleted"), "refused"))
-    assert(passJobs == 1, s"the contract pass ran $passJobs jobs")
-    assert(local.localKeys.isDefined, "the driver path was not taken")
+    assert(passJobs.size == 1, s"the contract pass ran ${passJobs.size} jobs")
+    assert(local.keyRows.isDefined, "the driver path was not taken")
     val distributed = onPath(Some("-1"))(
       Snap.contractPass(spark, m, delta, Some("_deleted"), "refused"))
-    assert(distributed.localKeys.isEmpty)
+    assert(distributed.keyRows.isEmpty)
     assert(local.ranges == distributed.ranges)
     assert(local.deltaRows == delta.count() &&
       distributed.deltaRows == local.deltaRows)
     val (v, mergeJobs) = jobsOf(Snap.merge(spark, loc, delta))
     assert(v == 2)
-    assert(mergeJobs <= 4, s"a small-delta merge ran $mergeJobs jobs")
+    assert(mergeJobs.size <= 4, s"a small-delta merge ran ${mergeJobs.size} jobs")
     assert(rows(Snap.read(spark, loc)) == rows(expectedAfterSmallDelta))
+  }
+
+  test("a delta past the driver bound in every one of many partitions " +
+      "returns about the bound in all and merges through the fallback") {
+    val loc = tmpLoc("overflow")
+    Snap.create(spark, loc, cust, Seq("c_custkey"), "c_custkey", 4,
+      layout = "range", tag = "t")
+    val m = Snap.head(spark, loc).get
+    // one long key is 24 bytes a key row, so the bound is `perPart`
+    // rows — and each of the 16 partitions holds that many
+    val perPart = 2000L
+    val parts = 16
+    val threshold = perPart * 24
+    val ins = spark.range(0L, parts * perPart, 1L, parts).select(
+      cust.schema.fields.toSeq.map(f => (f.name match {
+        case "c_custkey" => col("id") + 10000L
+        case "c_name" => concat(lit("Customer#"), col("id").cast("string"))
+        case "c_mktsegment" => lit("BULK")
+        case _ => lit(1)
+      }).cast(f.dataType).as(f.name)) :+ lit(false).as("_deleted"): _*)
+    onPath(Some(threshold.toString)) {
+      val (info, jobs) = jobsOf(
+        Snap.contractPass(spark, m, ins, Some("_deleted"), "refused"))
+      if (info.keyRows.nonEmpty) fail("the driver path held a delta past its bound")
+      assert(info.deltaRows == parts * perPart)
+      // the driver job (the first) returns about the bound in all, not a
+      // bound per partition: 16 × 2,000 rows would be ~1.5 MB
+      assert(jobs.head <= 2 * threshold + parts * 4096L,
+        s"the driver job returned ${jobs.head} bytes (jobs: $jobs)")
+      assert(Snap.merge(spark, loc, ins) == 2)
+    }
+    assert(rows(Snap.read(spark, loc)) ==
+      rows(cust.unionByName(ins.drop("_deleted"))))
   }
 
   test("create refuses a string key on range layout and a reserved '_b' " +
